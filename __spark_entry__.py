@@ -415,37 +415,54 @@ def _q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("features", _stringify_floats("features"))
 
 
-def _q_word_kn_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-level Kneser-Ney perplexity of each document under its own
-    language's LM, trained distributively on the same corpus. At order 2 the
-    whole train+score loop is SQL-expressible (oracle/kn_sql.py), so this
-    entry is fully hash-gated."""
+def _word_kn_ppl(
+    spark: SparkSession, sf_dir: str, order: int, alias: str
+) -> DataFrame:
+    """Train order-``order`` word-KN models distributively on the documents
+    table and score each doc under its own language's LM: tokens are
+    encoded to the model's symbol string, and each Arrow batch makes one
+    KNBatchScorer call per language on ``WordKNModel.char_model``
+    (bit-identical to ``WordKNModel.perplexity``), rounded to 6 places."""
     from pyspark.sql.types import DoubleType
 
     from language_identification_spark.operators.perplexity import (
+        KNBatchScorer,
+        perplexity_by_lang,
         train_word_kn_spark,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    models = train_word_kn_spark(docs.select("lang", "text"), order=2)
-    bc = spark.sparkContext.broadcast(models)
+    models = train_word_kn_spark(docs.select("lang", "text"), order=order)
+    bc = spark.sparkContext.broadcast(
+        (models, {lang: KNBatchScorer(m.char_model) for lang, m in models.items()})
+    )
 
     @F.pandas_udf(DoubleType())
     def _ppl(
         batches: Iterator[tuple[pd.Series, pd.Series]],
     ) -> Iterator[pd.Series]:
-        ms = bc.value
-        for langs, texts in batches:
-            out = []
-            for lang, text in zip(langs, texts):
-                m = ms.get(lang)
-                out.append(
-                    None if m is None or not text
-                    else round(m.perplexity(text.split()), 6)
-                )
-            yield pd.Series(out, dtype="float64")
+        ms, scorers = bc.value
+        for lang_col, texts in batches:
+            langs = lang_col.tolist()
+            encoded = [
+                ms[lang].encode(text.split()) if text and lang in ms else None
+                for lang, text in zip(langs, texts)
+            ]
+            out = perplexity_by_lang(scorers, encoded, langs)
+            yield pd.Series(
+                [None if p is None else round(p, 6) for p in out],
+                dtype="float64",
+            )
 
-    return docs.select("doc_id", "lang", _ppl("lang", "text").alias("word_ppl"))
+    return docs.select("doc_id", "lang", _ppl("lang", "text").alias(alias))
+
+
+def _q_word_kn_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Word-level Kneser-Ney perplexity of each document under its own
+    language's LM, trained distributively on the same corpus. At order 2 the
+    whole train+score loop is SQL-expressible (oracle/kn_sql.py), so this
+    entry is fully hash-gated."""
+    return _word_kn_ppl(spark, sf_dir, 2, "word_ppl")
 
 
 def _q_word_kn_ppl_o3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,34 +472,7 @@ def _q_word_kn_ppl_o3(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolated backoff (oracle/kn_sql.py:SQL_WORD_KN_PPL_O3). The Spark
     side trains the same order-3 model distributively and scores each doc
     under its own language's LM."""
-    from pyspark.sql.types import DoubleType
-
-    from language_identification_spark.operators.perplexity import (
-        train_word_kn_spark,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    models = train_word_kn_spark(docs.select("lang", "text"), order=3)
-    bc = spark.sparkContext.broadcast(models)
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(
-        batches: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        ms = bc.value
-        for langs, texts in batches:
-            out = []
-            for lang, text in zip(langs, texts):
-                m = ms.get(lang)
-                out.append(
-                    None if m is None or not text
-                    else round(m.perplexity(text.split()), 6)
-                )
-            yield pd.Series(out, dtype="float64")
-
-    return docs.select(
-        "doc_id", "lang", _ppl("lang", "text").alias("word_ppl3")
-    )
+    return _word_kn_ppl(spark, sf_dir, 3, "word_ppl3")
 
 
 def _q_word_kn_ppl_o4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,34 +484,7 @@ def _q_word_kn_ppl_o4(spark: SparkSession, sf_dir: str) -> DataFrame:
     each doc under its own language's LM; orders 4-5 are additionally
     bit-parity-tested against the in-memory oracle trainer
     (tests/test_kneser_ney.py)."""
-    from pyspark.sql.types import DoubleType
-
-    from language_identification_spark.operators.perplexity import (
-        train_word_kn_spark,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    models = train_word_kn_spark(docs.select("lang", "text"), order=4)
-    bc = spark.sparkContext.broadcast(models)
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(
-        batches: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        ms = bc.value
-        for langs, texts in batches:
-            out = []
-            for lang, text in zip(langs, texts):
-                m = ms.get(lang)
-                out.append(
-                    None if m is None or not text
-                    else round(m.perplexity(text.split()), 6)
-                )
-            yield pd.Series(out, dtype="float64")
-
-    return docs.select(
-        "doc_id", "lang", _ppl("lang", "text").alias("word_ppl4")
-    )
+    return _word_kn_ppl(spark, sf_dir, 4, "word_ppl4")
 
 
 def _q_ensemble_langid(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,24 +8,31 @@ computes everything in one iterator UDF:
 
     enrich(text) -> struct(stats: struct(...), lang, conf, ppl)
 
-calling the SAME oracle functions row-wise (oracle/quality.py:doc_stats,
-oracle/langid.py:NgramNBModel.detect, oracle/kneser_ney.py:KNModel.perplexity),
-so fusing cannot change results — parity stays byte-identical (tests).
+Stats call oracle/quality.py:doc_stats row-wise; langid scores the batch
+with oracle/langid.py:NgramNBModel.detect_batch (one numpy matrix pass);
+perplexity groups the batch's scored docs by predicted language and makes
+one operators/perplexity.py:KNBatchScorer call per language — bit-identical
+to oracle/kneser_ney.py:KNModel.perplexity, without its per-character
+Python recursion. Fusing and batching cannot change results; parity stays
+byte-identical (tests).
 
-Models ride a single broadcast; the NB model's dense numpy form and the
-reference-style lru caches build once per Python worker and persist across
-Arrow batches (SURVEY.md §4.1).
+Models ride a single broadcast; the NB model's dense numpy form, the
+scorers' key tables and the reference-style lru caches build once per Python
+worker and persist across Arrow batches (SURVEY.md §4.1).
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from language_identification_spark.operators.perplexity import (
+    KNBatchScorer,
+    perplexity_by_lang,
+)
 from language_identification_spark.operators.quality import STATS_SCHEMA
 from language_identification_spark.oracle.quality import STAT_FIELDS, doc_stats
 
@@ -57,11 +64,13 @@ def enrich_udf(
     the from-scratch numpy engine otherwise (operators/fasttext_np.py).
     The pass stays fused: still ONE ArrowEvalPython node."""
     sc = getattr(spark_or_sc, "sparkContext", spark_or_sc)
-    bc = sc.broadcast((model, kn_models))
+    bc = sc.broadcast(
+        (model, {lang: KNBatchScorer(m) for lang, m in (kn_models or {}).items()})
+    )
 
     @F.pandas_udf(ENRICH_SCHEMA)
     def _enrich(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        m, kns = bc.value
+        m, scorers = bc.value
         ft = None
         if fasttext_model_path is not None:
             from language_identification_spark.operators.lid import (
@@ -87,20 +96,12 @@ def enrich_udf(
             else:
                 # langid vectorized: one numpy matrix pass per Arrow batch
                 lid = m.detect_batch(texts)
-            stats_rows = []
-            ppls = []
-            for text, (lang, _conf) in zip(texts, lid):
-                stats_rows.append(doc_stats(text))
-                kn = kns.get(lang) if (kns and lang is not None) else None
-                if kn is None or not text:
-                    ppls.append(None)
-                else:
-                    p = kn.perplexity(text)
-                    ppls.append(None if math.isinf(p) else p)
+            langs = [r[0] for r in lid]
+            ppls = perplexity_by_lang(scorers, [t or None for t in texts], langs)
             yield pd.DataFrame(
                 {
-                    "stats": stats_rows,
-                    "lang": [r[0] for r in lid],
+                    "stats": [doc_stats(t) for t in texts],
+                    "lang": langs,
                     "conf": pd.Series([r[1] for r in lid], dtype="float64"),
                     "ppl": pd.Series(ppls, dtype="float64"),
                 }

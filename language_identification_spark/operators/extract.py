@@ -25,11 +25,23 @@ from pyspark.sql.types import StringType
 from language_identification_spark.oracle.extract import extract_text
 
 
-@F.pandas_udf(StringType())
-def extract_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+def _extract_batches(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """html binary/string -> cleaned extracted text (None when empty)."""
     for series in batches:
         yield series.map(extract_text)
+
+
+def extract_udf():
+    """A new extraction pandas UDF. Plans take a fresh one each, as
+    ``enrich_udf`` does: a UDF object caches its JVM function together with
+    the accumulator of the SparkContext it first ran in, so a shared one
+    fails every task's accumulator update once that context has stopped."""
+    return F.pandas_udf(_extract_batches, StringType())
+
+
+# the UDF body as a module-level name (``.func`` runs it in-process);
+# plans call extract_udf() instead
+extract_text_udf = extract_udf()
 
 
 def with_extracted_text(df, html_col: str = "html", out_col: str = "extracted_text"):
@@ -42,7 +54,7 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "extracted_te
     the limit. Column pruning still reaches the scan: only ``html_col``
     enters the Python worker.
     """
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
+    return df.withColumn(out_col, extract_udf()(F.col(html_col)))
 
 
 def clean_text_expr(col: Column) -> Column:

@@ -17,22 +17,34 @@ LMs even at 100 TB corpus scale, because the gram space saturates). The float
 assembly is oracle/kneser_ney.py:assemble_model on both paths, so the Spark
 trainer is bit-identical to the in-memory trainer (tested).
 
-Scoring broadcasts {lang: KNModel} (plain dicts, ~100s of KB) and runs an
-Iterator-of-Series pandas UDF; documents whose language has no model score
-null, which no rule fires on (null-safe comparison) — mirroring the oracle's
-ppl=None path.
+Scoring broadcasts {lang: KNBatchScorer} (each wraps a KNModel of plain
+dicts, ~100s of KB) and runs an Iterator-of-Series pandas UDF. Each Python
+worker turns a model into sorted integer-key arrays the first time it scores
+that language, then scores one language group of an Arrow batch per call:
+the per-character backoff recursion of ``KNModel.prob`` becomes one numpy
+pass per order over the whole group, bit-identical to
+``KNModel.perplexity`` (the row-wise oracle, unchanged). Documents whose
+language has no model score null, which no rule fires on (null-safe
+comparison) — mirroring the oracle's ppl=None path.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+import operator
+from collections.abc import Iterator, Sequence
+from functools import reduce
+from itertools import islice
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StringType
 
 from language_identification_spark.oracle.kneser_ney import (
+    BOS,
+    EOS,
     KNModel,
     assemble_model,
     padded_chars,
@@ -242,26 +254,203 @@ def train_word_kn_spark(
     }
 
 
+# code points scored per numpy pass: bounds the working set (about ten
+# int64/float64 arrays of this length) however large an Arrow batch is
+_CHUNK_CODEPOINTS = 1 << 18
+# above every rank key: keys stay below |prefix strings| * alphabet size
+_KEY_SENTINEL = np.iinfo(np.int64).max
+# above every code point (U+10FFFF is the last)
+_CODEPOINT_SENTINEL = 0x110000
+
+
+def _codepoints(s: str) -> np.ndarray:
+    return np.frombuffer(
+        s.encode("utf-32-le", "surrogatepass"), dtype="<u4"
+    ).astype(np.int64)
+
+
+def _lookup(keys: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Index of each query in ``keys`` (sorted, unique, ending in a sentinel
+    above every query); a query not in ``keys`` gets the sentinel's index."""
+    idx = np.searchsorted(keys, q)
+    return np.where(keys[idx] == q, idx, len(keys) - 1)
+
+
+class KNBatchScorer:
+    """``KNModel.perplexity`` over a whole batch of documents at once.
+
+    Constructing one only wraps the model, and only the model is pickled:
+    the lookup tables are built by the first ``perplexity_batch`` call in
+    each process and reused by every later call there.
+
+    Tables. Characters get ids 0..A-1 by code point over the model's
+    alphabet; id A stands for every character outside it (M = A+1 ids). For
+    each length L ≥ 2, every string of length L that begins some k-gram of
+    the model (k ≥ L) gets a rank: its index in the sorted keys
+    ``rank(s[:-1]) * M + id(s[-1])`` (rank of a single char = its id).
+    Keys built from ranks stay below ``|strings| * M`` at any order, where
+    ``M**order`` would overflow int64 for word models (~10^5 symbols). Over
+    those ranks sit the unigram ``p1`` per id, λ per order-k context and
+    ``max(c-D, 0)/total`` per order-k gram, each computed with the
+    expression ``KNModel.prob`` uses; absent strings rank at a sentinel
+    index whose λ is unseen and whose term is 0.
+
+    Scoring. Docs are casefolded and padded as ``padded_chars`` does,
+    concatenated into one UTF-32 stream and mapped to ids. One pass per
+    order k then ranks the k-string ending at every position and applies
+    ``p_k = where(ctx_seen, term + λ·p_{k-1}, p_{k-1})`` — the recursion of
+    ``KNModel.prob`` unrolled bottom-up (an unseen gram's term is 0.0 there
+    too). Logs are taken with ``math.log2`` and summed left to right per
+    doc as ``KNModel.logprob2`` does (numpy's log2 and pairwise sums round
+    differently), so each perplexity is bit-identical to the oracle's and
+    independent of which documents share the batch.
+    """
+
+    def __init__(self, model: KNModel) -> None:
+        self.model = model
+        self._tables = None
+
+    def __getstate__(self) -> dict:
+        return {"model": self.model}
+
+    def __setstate__(self, state: dict) -> None:
+        self.__init__(state["model"])
+
+    def _build(self) -> tuple:
+        m = self.model
+        n = m.order
+        alphabet = sorted(set("".join(g for c in m.counts.values() for g in c)))
+        alpha = np.append(_codepoints("".join(alphabet)), _CODEPOINT_SENTINEL)
+        n_ids = len(alpha)  # the alphabet plus the id of unseen characters
+
+        d1, d2, d3 = m.discounts[1]
+        _, n1, n2, n3p = m.ctx_stats[1][""]
+        lam1 = (d1 * n1 + d2 * n2 + d3 * n3p) / m.uni_total
+        p1 = np.array(
+            [
+                max(c - m._discount(1, c), 0.0) / m.uni_total
+                + lam1 / (m.vocab_size + 1)
+                for c in [m.counts[1].get(ch, 0) for ch in alphabet] + [0]
+            ]
+        )
+
+        grams = {
+            k: _lookup(alpha, _codepoints("".join(m.counts[k]))).reshape(-1, k)
+            for k in range(2, n + 1)
+        }
+        rank = {k: g[:, 0] for k, g in grams.items()}  # of each gram's prefix
+        keys, term, lam, seen = {}, {}, {}, {}
+        prev_size = n_ids
+        for k in range(2, n + 1):
+            q = {j: rank[j] * n_ids + g[:, k - 1] for j, g in grams.items() if j >= k}
+            keys[k] = np.append(
+                np.unique(np.concatenate(list(q.values()))), _KEY_SENTINEL
+            )
+            ctx_rank = rank[k]  # of each order-k gram's context, length k-1
+            for j, qj in q.items():
+                rank[j] = _lookup(keys[k], qj)
+
+            d1, d2, d3 = m.discounts[k]
+            stats = m.ctx_stats[k]
+            lam_of = {
+                ctx: (d1 * n1 + d2 * n2 + d3 * n3p) / total
+                for ctx, (total, n1, n2, n3p) in stats.items()
+            }
+            term[k] = np.zeros(len(keys[k]))
+            term[k][rank[k]] = [
+                max(c - m._discount(k, c), 0.0) / stats[g[:-1]][0]
+                for g, c in m.counts[k].items()
+            ]
+            lam[k] = np.zeros(prev_size)
+            lam[k][ctx_rank] = [lam_of[g[:-1]] for g in m.counts[k]]
+            seen[k] = np.zeros(prev_size, dtype=bool)
+            seen[k][ctx_rank] = True
+            prev_size = len(keys[k])
+        return alpha, n_ids, p1, keys, term, lam, seen
+
+    def perplexity_batch(self, texts: Sequence[str | None]) -> list[float]:
+        """``[self.model.perplexity(t) for t in texts]``, bit for bit."""
+        if self._tables is None:
+            self._tables = self._build()
+        out = [math.inf] * len(texts)
+        chunk: list[int] = []
+        size = 0
+        for i, text in enumerate(texts):
+            if text:
+                chunk.append(i)
+                size += len(text)
+            if chunk and (size >= _CHUNK_CODEPOINTS or i == len(texts) - 1):
+                for j, p in zip(chunk, self._score([texts[j] for j in chunk])):
+                    out[j] = p
+                chunk, size = [], 0
+        return out
+
+    def _score(self, docs: list[str]) -> list[float]:
+        alpha, n_ids, p1, keys, term, lam, seen = self._tables
+        n = self.model.order
+        folded = [d.casefold() for d in docs]
+        pad = BOS * (n - 1)
+        ids = _lookup(alpha, _codepoints("".join(pad + f + EOS for f in folded)))
+        p = p1[ids]
+        r = ids  # rank of the k-string ending at each position
+        for k in range(2, n + 1):
+            ctx = np.empty_like(r)
+            ctx[0] = len(lam[k]) - 1  # nothing precedes the stream
+            ctx[1:] = r[:-1]
+            r = _lookup(keys[k], ctx * n_ids + ids)
+            p = np.where(seen[k][ctx], term[k][r] + lam[k][ctx] * p, p)
+        # every doc's context windows stay inside its own BOS padding; the
+        # padding positions themselves predict nothing
+        n_pred = [len(f) + 1 for f in folded]
+        if n > 1:
+            padded = np.array(n_pred) + (n - 1)
+            starts = np.cumsum(padded) - padded
+            keep = np.ones(len(p), dtype=bool)
+            keep[(starts[:, None] + np.arange(n - 1)).ravel()] = False
+            p = p[keep]
+        logs = map(math.log2, p.tolist())
+        return [
+            2.0 ** (-reduce(operator.add, islice(logs, c), 0.0) / c)
+            for c in n_pred
+        ]
+
+
+def perplexity_by_lang(
+    scorers: dict[str, KNBatchScorer],
+    texts: Sequence[str | None],
+    langs: Sequence[str | None],
+) -> list[float | None]:
+    """Row-aligned perplexities with one ``perplexity_batch`` call per
+    language present; None where the text is None or its language has no
+    scorer."""
+    groups: dict[str, list[int]] = {}
+    for i, (text, lang) in enumerate(zip(texts, langs)):
+        if text is not None and lang in scorers:
+            groups.setdefault(lang, []).append(i)
+    out: list[float | None] = [None] * len(texts)
+    for lang, rows in groups.items():
+        ppls = scorers[lang].perplexity_batch([texts[i] for i in rows])
+        for i, p in zip(rows, ppls):
+            out[i] = p
+    return out
+
+
 def ppl_udf(spark_or_sc, models: dict[str, KNModel]):
-    """(text, lang) -> perplexity double; null when lang has no model (the
-    rule engine's null-safe comparisons then skip the ppl gate, matching the
-    oracle's ppl=None behavior)."""
+    """(text, lang) -> perplexity double; null when lang has no model or the
+    text is empty (the rule engine's null-safe comparisons then skip the ppl
+    gate, matching the oracle's ppl=None behavior)."""
     sc = getattr(spark_or_sc, "sparkContext", spark_or_sc)
-    bc = sc.broadcast(models)
+    bc = sc.broadcast({lang: KNBatchScorer(m) for lang, m in models.items()})
 
     @F.pandas_udf(DoubleType())
     def _ppl(
         batches: Iterator[tuple[pd.Series, pd.Series]],
     ) -> Iterator[pd.Series]:
-        ms = bc.value
+        scorers = bc.value
         for texts, langs in batches:
-            out = []
-            for text, lang in zip(texts, langs):
-                m = ms.get(lang)
-                if m is None or not text:
-                    out.append(None)
-                else:
-                    out.append(m.perplexity(text))
-            yield pd.Series(out, dtype="float64")
+            ppls = perplexity_by_lang(
+                scorers, [t or None for t in texts], langs.tolist()
+            )
+            yield pd.Series(ppls, dtype="float64")
 
     return _ppl

@@ -4,9 +4,10 @@ Stage graph (all narrow until the metrics aggregation):
 
     scan pages (column-pruned: url, warc_ts, html)
       -> repartition(hash(url))            # uniform key defeats host skew
-      -> extract_text_udf                  # Arrow batch, Python
-      -> doc_stats_udf                     # Arrow batch, Python
-      -> lid_udf                           # Arrow batch, Python, broadcast model
+      -> extract_udf                       # Arrow batch, Python
+      -> enrich_udf                        # ONE Arrow pass, Python, broadcast
+                                           # models: doc stats + NB langid +
+                                           # per-language KN perplexity
       -> rule exprs + scrub_expr           # JVM, whole-stage codegen
       -> write results partitioned by bucket
     metrics = results.groupBy(rule).count()  # the only shuffle besides repartition
@@ -42,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from language_identification_spark.operators.enrich import with_enrichment
-from language_identification_spark.operators.extract import extract_text_udf
+from language_identification_spark.operators.extract import extract_udf
 from language_identification_spark.operators.quality import with_keep_decision
 from language_identification_spark.operators.scrub import scrub_expr
 from language_identification_spark.oracle.langid import NgramNBModel
@@ -95,7 +96,7 @@ def quality_filter_plan(
         # uniform re-spread before compute-heavy UDFs (host-skew defense)
         df = df.repartition(repartition_to, F.crc32(F.col("url")))
     if text_col is None:
-        df = df.withColumn("extracted_text", extract_text_udf(F.col("html")))
+        df = df.withColumn("extracted_text", extract_udf()(F.col("html")))
     else:
         df = df.withColumn("extracted_text", F.col(text_col))
     # stats + langid + perplexity fused into ONE Arrow pass (operators/enrich.py)

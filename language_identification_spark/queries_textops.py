@@ -18,6 +18,11 @@ both engines):
                         (operators/mixer.py:waterfill_allocation)
   width_fold          — fullwidth->ASCII fold + control strip (the
                         NFKC-width subset of ftfy's remaining cleanup)
+  incremental_requalify — re-score only added/changed docs of the new
+                        snapshot, carry unchanged docs' previous verdict
+  containment_join    — exact asymmetric containment self-join over
+                        word-3-gram shingles (quote/excerpt detector)
+  ngram_novelty       — per-doc share of word-3-grams first seen in it
 """
 
 from __future__ import annotations
